@@ -12,7 +12,7 @@ object CacheScope {
   private val scoped = scala.collection.mutable.ArrayBuffer.empty[() => Unit]
 
   /** Past this many outstanding entries the scope logs a warning: a
-    * long-lived session that registers caches (every stamp/assign/
+    * long-lived session that registers caches (every stamp and
     * persistScoped call does) but never calls [[release]] accumulates
     * MEMORY_AND_DISK blocks indefinitely. We deliberately do NOT
     * auto-evict — a registered entry may be a localCheckpoint, which

@@ -10,11 +10,11 @@ import org.apache.spark.sql.types.{LongType, StructField}
   * The window formulation (`sum(nt) over (partition by source order by
   * doc_id)`) funnels each source through ONE task, so parallelism is
   * capped at #sources — fatal when one source holds terabytes. This
-  * operator is the [[GlobalSerial]] pattern applied to a SEGMENTED
+  * operator is the [[OmniPipeline.stamp]] pattern applied to a SEGMENTED
   * running sum: range-partition by (source, doc_id) so a giant source
   * spans many partitions, take per-(partition, source) token totals in
   * one lightweight pass (metadata-scale: ≤ #partitions + #sources rows
-  * reach the driver, like zipWithIndex's counts), prefix-sum those on
+  * reach the driver, like the stamper's counts), prefix-sum those on
   * the driver into per-partition starting offsets, then assign each
   * doc's bin = ⌊(its source-running offset)/budget⌋ in a second fully
   * parallel pass. Identical output to the window form for any total

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.Tables.t
-import graft.operators.GlobalSerial
+import graft.operators.OmniPipeline
 
 /** Joins, ordering, set ops, and maintenance-as-derivation —
   * SURVEY.md §2.5 (J1–J11), §2.6 (W1), §2.7 (O1–O6), §2.8 (M2/M4).
@@ -191,18 +191,19 @@ object JoinQueries {
       .orderBy("c_nationkey")
   }
 
-  /** W1 — deterministic global serial via [[GlobalSerial]] (range
-    * partition + zipWithIndex), never a one-partition row_number. The
-    * oracle IS the naive global row_number — proving the scalable path
-    * computes the identical total order.
+  /** W1 — deterministic global serial via [[OmniPipeline.stamp]]
+    * (range partition + partition-offset stamp), never a one-partition
+    * row_number. The oracle IS the naive global row_number — proving
+    * the scalable path computes the identical total order.
     */
   val w1 = Q(
     "w1_global_serial",
     """SELECT o_orderkey,
       |  row_number() OVER (ORDER BY o_orderdate, o_orderkey) AS serial
       |FROM orders ORDER BY o_orderkey""".stripMargin) { (s, dir) =>
-    GlobalSerial
-      .assign(t(s, dir, "orders"), "serial", col("o_orderdate"), col("o_orderkey"))
+    OmniPipeline
+      .stamp(t(s, dir, "orders"), col("o_orderdate"), col("o_orderkey"))
+      .select(col("_1.*"), col("_2").as("serial"))
       .select("o_orderkey", "serial")
       .orderBy("o_orderkey")
   }

@@ -737,26 +737,14 @@ object PipelineQueries {
     * where co-resident scratch ~2×15 GB starts crowding a one-box
     * sweep disk; every driver/bench SF is 5 orders of magnitude below
     * it, every regime the sequential form was built for is above it).
-    * `GRAFT_M4_FORKS=sequential|coresident` pins the schedule,
-    * `GRAFT_M4_SEQ_ROWS` moves the auto threshold. Both schedules
-    * produce identical rows (spec-pinned in `FullReorgSpec`); the
-    * policy only trades latency against peak scratch.
+    * Both schedules produce identical rows (spec-pinned in
+    * `FullReorgSpec`); the policy only trades latency against peak
+    * scratch.
     */
   private[graft] def m4Sequential(ordersRows: Long): Boolean =
-    sys.env.get("GRAFT_M4_FORKS") match {
-      case Some("sequential") => true
-      case Some("coresident") => false
-      case Some(other) => throw new IllegalArgumentException(
-        s"GRAFT_M4_FORKS must be 'sequential' or 'coresident', got '$other'")
-      case None => ordersRows >=
-        sys.env.get("GRAFT_M4_SEQ_ROWS").map { v =>
-          try v.toLong
-          catch { case e: NumberFormatException =>
-            throw new IllegalArgumentException(
-              s"GRAFT_M4_SEQ_ROWS must be a row count (long), got '$v'", e)
-          }
-        }.getOrElse(50000000L)
-    }
+    ordersRows >= M4SequentialRows
+
+  private val M4SequentialRows = 50_000_000L
 
   /** Union of the two reorg fork serves under either schedule — see
     * [[m4Sequential]] for when each is chosen.
@@ -772,7 +760,7 @@ object PipelineQueries {
       // but via the stamper's own scoped MEMORY_AND_DISK persist
       // instead of a checkpoint: both fork plans read one
       // InMemoryRelation, so the parse, the range exchange, the sort
-      // and the zipWithIndex count pass execute once, not per fork —
+      // and the stamper's counts pass execute once, not per fork —
       // only the cheap cached-batch rescan and the per-fork ledger
       // derivation run twice. No checkpoint round-trip, no barrier:
       // at bench scale that materialization is exactly what made the
@@ -808,11 +796,10 @@ object PipelineQueries {
       // extra copy was the difference between fitting the one-box
       // sweep disk and ENOSPC mid-snapshot (measured this round); the
       // persist is the same executor-disk durability class a
-      // localCheckpoint has, so the copy buys nothing. zipWithIndex's
-      // eager count job materializes every cached partition EXCEPT the
-      // last (it only sizes partitions 0..n-2), so force the full pass
-      // before sweeping the parse shuffles the cache would otherwise
-      // need for a last-partition recompute.
+      // localCheckpoint has, so the copy buys nothing. The stamper's
+      // counts aggregate has already filled every cached partition
+      // (spec-pinned in OmniPipelineSpec), so the parse shuffles can be
+      // swept right away.
       //
       // Under spark.graft.reliableCheckpoint the extra copy IS the
       // point (survive executor loss between the fork serves): snapshot
@@ -828,10 +815,7 @@ object PipelineQueries {
           graft.CacheScope.releaseSince(mParse)
           graft.CacheScope.register(snap)
           snap
-        } else {
-          stamped0.count()
-          stamped0
-        }
+        } else stamped0
       org.apache.spark.GraftShuffleSweep.dropSince(sc, shufParse)
       forks
         .map { case (label, fork) =>

@@ -3,6 +3,7 @@ package graft
 import graft.Fixtures._
 import graft.model._
 import graft.operators.{Balances, MetaDexOps, OmniPipeline}
+import org.apache.spark.sql.functions.col
 
 /** End-to-end derivation over a small fixture chain, the freeze
   * sequencer, MetaDEx dedup, and the reorg invariant (FIXTURES.md §B.3:
@@ -93,9 +94,7 @@ class OmniPipelineSpec extends SparkTestBase {
     }.toList)
     val stamped = OmniPipeline
       .stamp(spark.createDataset(rows).repartition(13),
-        org.apache.spark.sql.functions.col("_1"),
-        org.apache.spark.sql.functions.col("_2"),
-        org.apache.spark.sql.functions.col("_3"))
+        col("_1"), col("_2"), col("_3"))
       .collect()
     val expected = rows.sorted
       .zipWithIndex.map { case (t, i) => t._3 -> (i + 1L) }.toMap
@@ -104,7 +103,95 @@ class OmniPipelineSpec extends SparkTestBase {
       s"key ${t._3} stamped $s, expected ${expected(t._3)}") }
     assert(stamped.map(_._2).max == 1000L &&
       stamped.map(_._2).toSet.size == 1000)
+    // the same rows as a DataFrame through w1_global_serial's
+    // stamp-then-flatten path: a base column named with a backtick and
+    // a dot passes through unparsed, and the serial is non-nullable
+    val df = spark.createDataset(rows).toDF("b`x.y", "p", "k").repartition(13)
+    val flat = OmniPipeline.stamp(df, col("`b``x.y`"), col("p"), col("k"))
+      .select(col("_1.*"), col("_2").as("serial"))
+    assert(flat.columns.toSeq == Seq("b`x.y", "p", "k", "serial"))
+    assert(!flat.schema("serial").nullable)
+    val flatSerials = flat.select("k", "serial").collect()
+      .map(r => r.getString(0) -> r.getLong(1))
+    assert(flatSerials.length == 1000 && flatSerials.toMap == expected)
     graft.queries.Q.releaseScoped()
+  }
+
+  /** Runs `body` with `n` range partitions that AQE may not coalesce
+    * (the stamp's partition count is then exactly `n`), and returns its
+    * result with the ids of the RDDs it newly persisted.
+    */
+  private def stampingWithRanges[A](n: Int)(body: => A): (A, Set[Int]) = {
+    val keys = Seq("spark.sql.shuffle.partitions",
+      "spark.sql.adaptive.coalescePartitions.enabled")
+    val saved = keys.map(k => k -> spark.conf.get(k))
+    spark.conf.set(keys(0), n.toString)
+    spark.conf.set(keys(1), "false")
+    try {
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      val a = body
+      (a, spark.sparkContext.getPersistentRDDs.keySet.toSet -- before)
+    } finally saved.foreach { case (k, v) => spark.conf.set(k, v) }
+  }
+
+  /** Cached partition indices of the given RDDs, read from the block
+    * manager master — block puts report to it before their task ends,
+    * while `getRDDStorageInfo` lags behind on the listener bus.
+    */
+  private def cachedSplits(ids: Set[Int]): Map[Int, Set[Int]] =
+    org.apache.spark.SparkEnv.get.blockManager.master
+      .getMatchingBlockIds(_.isRDD, askStorageEndpoints = false)
+      .collect { case org.apache.spark.storage.RDDBlockId(r, p) if ids(r) => (r, p) }
+      .groupMap(_._1)(_._2).map { case (r, ps) => r -> ps.toSet }
+
+  private val tieRows = new scala.util.Random(29).shuffle((1 to 2000).map { i =>
+    (i.toLong % 41, i.toLong % 3, f"c$i%04d")
+  }.toList)
+
+  test("stamp returns with its cache filled in every range partition") {
+    // the counts aggregate inside stamp is the cache's eager fill — the
+    // m4 sequential schedule sweeps the parse shuffles right after
+    // stamping, relying on no cached partition being left cold
+    val (_, ids) = stampingWithRanges(16) {
+      OmniPipeline.stamp(spark.createDataset(tieRows).repartition(13),
+        col("_1"), col("_2"), col("_3"))
+    }
+    try {
+      assert(ids.nonEmpty, "stamp persisted nothing")
+      val cached = cachedSplits(ids)
+      ids.foreach { id =>
+        assert(spark.sparkContext.getPersistentRDDs(id).getNumPartitions == 16)
+        assert(cached.getOrElse(id, Set.empty) == (0 until 16).toSet,
+          s"rdd $id cached partitions: ${cached.get(id)}")
+      }
+    } finally graft.queries.Q.releaseScoped()
+  }
+
+  test("stamp serials survive eviction of its cache between the counts " +
+      "and the consumer (cache-stability pin)") {
+    // the offsets come from counting the cached partitions; dropping
+    // every cached block after stamp returns forces the consumer to
+    // recompute them from lineage, which must reproduce the same rows
+    // in the same order or the offsets misnumber whole ranges
+    val (stamped, ids) = stampingWithRanges(16) {
+      OmniPipeline.stamp(spark.createDataset(tieRows).repartition(13),
+        col("_1"), col("_2"), col("_3"))
+    }
+    try {
+      val cachedBefore = cachedSplits(ids)
+      assert(cachedBefore.nonEmpty && cachedBefore.values.forall(_.size == 16))
+      ids.foreach(id => org.apache.spark.SparkEnv.get.blockManager.master
+        .removeRdd(id, blocking = true))
+      assert(cachedSplits(ids).isEmpty, "stamper cache blocks survived eviction")
+      val got = stamped.collect()
+      val expected = tieRows.sorted
+        .zipWithIndex.map { case (t, i) => t._3 -> (i + 1L) }.toMap
+      assert(got.length == tieRows.size)
+      got.foreach { case (t, s) => assert(expected(t._3) == s,
+        s"key ${t._3} stamped $s, expected ${expected(t._3)}") }
+      assert(got.map(_._2).max == got.length.toLong)
+      assert(got.map(_._2).toSet == (1L to got.length.toLong).toSet)
+    } finally graft.queries.Q.releaseScoped()
   }
 
   test("withSerials at an adversarial 4096-range-partition stamp: " +
